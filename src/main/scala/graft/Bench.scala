@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every bench-flagged gate query against
   * SPARK_GRAFT_SF_DIR and prints one compact JSON line (totals, ingest
@@ -21,35 +20,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec warns "No Partition Defined ... single partition" on
-    // EVERY unpartitioned window, including the bucket-prefix
-    // combines whose input is a bucket-count-bounded aggregate by
-    // design. There is no per-plan suppression, so silence the class
-    // logger here — safe by construction since round 13: PlanSpec's
-    // "WindowExec guardrail" sweep asserts EVERY gate's unpartitioned
-    // windows consume an aggregate/limit/literal-bounded subtree, so
-    // a future corpus-sized single-partition window fails the build
-    // instead of hiding in a silenced log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
-    // DataSource warns "All paths were ignored" for every overwrite
-    // whose target dir does not exist yet (the heap exports write ~20
-    // `_`-prefixed table dirs per dump — 10+ lines of noise in every
-    // bench/leakcheck tail). Write-path-only noise: an accidentally
-    // empty READ cannot hide behind this — every gate's result is
-    // hash-checked against its DuckDB oracle.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.datasources.DataSource",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession()
+    val cpus = GraftSession.cpus
     // A drained streaming gate's stop() cancels its job group after
     // the last job already finished, and DAGScheduler WARNs "Failed
     // to cancel job group …" — the last benign [error]-channel line
@@ -196,7 +169,7 @@ object Bench {
       // carries scheduler jitter; the minimum is the statistic every
       // other tier already trusts
       val t = (1 to 2).map(_ => timed(() =>
-        spark.range(0L, 3200000000L, 1L, cpus.toInt)
+        spark.range(0L, 3200000000L, 1L, cpus)
           // bit_xor, not sum: summing billions of hash values
           // overflows Long and ANSI mode turns that into an
           // ArithmeticException
@@ -552,7 +525,7 @@ object Bench {
         // triggers; the 32c record stays the fallback baseline
         val committed = {
           val own =
-            if (cpus != "32") committedRecord(s"BENCH_DETAIL_c$cpus.json")
+            if (cpus != 32) committedRecord(s"BENCH_DETAIL_c$cpus.json")
             else Map.empty[String, Any]
           if (own.nonEmpty) own else committedRecord("BENCH_DETAIL.json")
         }
@@ -806,7 +779,7 @@ object Bench {
     // (r16 verdict, What's wrong #2) — now both records coexist.
     val detailName =
       if (only.isDefined) "BENCH_DETAIL_PARTIAL.json"
-      else if (cpus != "32") s"BENCH_DETAIL_c$cpus.json"
+      else if (cpus != 32) s"BENCH_DETAIL_c$cpus.json"
       else "BENCH_DETAIL.json"
     try {
       val p = java.nio.file.Paths.get(detailName)

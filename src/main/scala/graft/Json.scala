@@ -1,9 +1,9 @@
 package graft
 
-/** Minimal JSON emitters shared by the mains and the heap analysis
-  * (no external deps allowed in this build). The escape covers quote,
-  * backslash, and ALL control chars — one copy, so a future escaping
-  * fix can't miss a duplicate.
+/** Minimal JSON emitters and parser shared by the mains, the heap
+  * servers and the heap analysis (no external deps allowed in this
+  * build). The escape covers quote, backslash, and ALL control chars —
+  * one copy, so a future escaping fix can't miss a duplicate.
   */
 object Json {
   def str(s: String): String =
@@ -20,11 +20,28 @@ object Json {
   def obj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
 
+  /** One result cell as JSON — only types whose toString IS valid JSON
+    * pass through raw; everything else (timestamp, date, array, struct,
+    * a non-finite float) is quoted and escaped instead of corrupting
+    * the document.
+    */
+  def cell(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case d: java.math.BigDecimal => d.toPlainString
+    case d: java.lang.Double => if (d.isInfinite || d.isNaN) str(d.toString) else d.toString
+    case f: java.lang.Float => if (f.isInfinite || f.isNaN) str(f.toString) else f.toString
+    case n: java.lang.Number => n.toString
+    case b: java.lang.Boolean => b.toString
+    case other => str(other.toString)
+  }
+
   /** Full recursive JSON parser — objects become insertion-ordered
     * Map[String, Any], arrays Vector[Any], numbers Long (integral) or
     * Double, plus String/Boolean/null. Zero-dependency by the build's
-    * design; the JSON-RPC framing of the MCP transport needs nested
-    * values, which HeapServer's flat parser deliberately rejects.
+    * design. The JSON-RPC framing of the MCP transport uses the nested
+    * values; HeapServer.parseFlat reads its request bodies through this
+    * parser too and rejects any nested value.
     */
   def parse(s: String): Any = {
     val p = new Parser(s)

@@ -27,18 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object PipelineCli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Read-or-write the (width, depth) params row of a CountSketch
     * grid dir: `requested` Some on build (first build records, later
     * builds refuse a mismatch), None on read paths (params must
@@ -66,38 +54,38 @@ object PipelineCli {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "curate" :: in :: out :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val minTokens = rest.headOption.map(_.toInt).getOrElse(10)
       Curate.curate(spark.read.parquet(in), "doc_id", "text", minTokens = minTokens)
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "dedup" :: in :: out :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       Dedup.dropExactDuplicates(spark.read.parquet(in), "doc_id", "text")
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "neardup" :: in :: out :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val threshold = rest.headOption.map(_.toDouble).getOrElse(0.6)
       Dedup.minhashLsh(spark.read.parquet(in), "doc_id", "text",
           shingleN = 3, numHashes = 12, numBands = 4, threshold = threshold)
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "knn" :: emb :: queries :: out :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       Similarity.knnBruteForce(spark.read.parquet(emb), spark.read.parquet(queries),
           "vec_id", "embedding", k)
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "ivf-build" :: emb :: indexDir :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val nLists = rest.headOption.map(_.toInt).getOrElse(64)
       Similarity.writeIvfIndex(spark.read.parquet(emb), "vec_id", "embedding",
         nLists = nLists, dir = indexDir)
       spark.stop()
     case "ivf-query" :: indexDir :: queries :: out :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       val nProbe = rest.drop(1).headOption.map(_.toInt).getOrElse(8)
       Similarity.knnIvfIndexed(spark, indexDir, spark.read.parquet(queries),
@@ -105,18 +93,18 @@ object PipelineCli {
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "ivf-append" :: indexDir :: emb :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       Similarity.appendIvfIndex(spark, indexDir, spark.read.parquet(emb),
         "vec_id", "embedding")
       spark.stop()
     case "ivf-remove" :: indexDir :: ids :: Nil =>
       // ids.parquet needs a vec_id column; rewrites only touched cells
-      val spark = session()
+      val spark = GraftSession()
       Similarity.removeDocsFromIvfIndex(spark, indexDir,
         spark.read.parquet(ids), "vec_id")
       spark.stop()
     case "redact" :: in :: out :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       spark.read.parquet(in)
         .withColumn("text", graft.functions.TextFunctions.redactPii(col("text")))
         .write.mode("overwrite").parquet(out)
@@ -124,7 +112,7 @@ object PipelineCli {
     case "kmv-build" :: in :: table :: groupCol :: valueCol :: rest =>
       // one bottom-k shard write per invocation (append cadence);
       // k is params-as-law after the first write
-      val spark = session()
+      val spark = GraftSession()
       val k = rest.headOption.map(_.toInt).getOrElse(64)
       val shard = rest.drop(1).headOption.getOrElse("0")
       graft.operators.Sketches.writeKmvShard(
@@ -133,13 +121,13 @@ object PipelineCli {
     case "kmv-estimate" :: table :: out :: rest =>
       // distinct estimates per group from the sketch table alone;
       // optional comma-separated shard subset
-      val spark = session()
+      val spark = GraftSession()
       val shards = rest.headOption.map(_.split(",").toSeq)
       graft.operators.Sketches.kmvEstimateFromShards(spark, table, shards)
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "kmv-remove-shard" :: table :: shard :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       graft.operators.Sketches.removeKmvShard(spark, table, shard)
       spark.stop()
     case "cs-build" :: in :: gridDir :: valueCol :: rest =>
@@ -147,7 +135,7 @@ object PipelineCli {
       // params-as-law after the first build — a grid merged or
       // compared under different hashing params is silently garbage,
       // so mismatch refuses exactly like the kmv table's k
-      val spark = session()
+      val spark = GraftSession()
       val width = rest.headOption.map(_.toInt).getOrElse(256)
       val depth = rest.drop(1).headOption.map(_.toInt).getOrElse(5)
       val (w, d) = csParams(spark, gridDir, Some((width, depth)))
@@ -156,14 +144,14 @@ object PipelineCli {
         .write.mode("overwrite").parquet(s"$gridDir/grid")
       spark.stop()
     case "cs-estimate" :: gridDir :: out :: markers :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       val (w, d) = csParams(spark, gridDir, None)
       graft.operators.Sketches.countSketchEstimates(
           spark.read.parquet(s"$gridDir/grid"), markers.split(",").toSeq, w, d)
         .write.mode("overwrite").parquet(out)
       spark.stop()
     case "cs-inner" :: dirA :: dirB :: out :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       val (wa, da) = csParams(spark, dirA, None)
       val (wb, db) = csParams(spark, dirB, None)
       require(wa == wb && da == db,
@@ -176,7 +164,7 @@ object PipelineCli {
       // heavy-hitter extraction reads the CORPUS (it scores the
       // vocabulary and exact-verifies the survivors), so unlike
       // cs-estimate it takes the input table, not a grid dir
-      val spark = session()
+      val spark = GraftSession()
       val width = rest.headOption.map(_.toInt).getOrElse(256)
       val depth = rest.drop(1).headOption.map(_.toInt).getOrElse(5)
       val k = rest.drop(2).headOption.map(_.toInt).getOrElse(20)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +9,7 @@ object Verify {
     // local iteration; the driver always passes exactly two args.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec warns "No Partition Defined ... single partition" on
-    // EVERY unpartitioned window, including the five bucket-prefix
-    // combines whose input is a bucket-count-bounded aggregate by
-    // design (PlanSpec "bounded prefix windows" pins that
-    // structurally). There is no per-plan suppression, so silence the
-    // class logger here — the anti-pattern itself stays policed by
-    // the spec, not the log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
-    // "All paths were ignored" fires on every overwrite whose target
-    // dir does not exist yet (heap exports, index builds) — pure
-    // write-path noise; empty READS stay visible through the oracle
-    // hash checks, not the log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.datasources.DataSource",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1587,20 +1587,7 @@ final class HeapAnalysis(t: HeapTables) {
     */
   def analyzeJson(topN: Int = 30, waste: Boolean = true, maxTier: Int = 2,
       sessionId: String = "", graph: Boolean = true): String = {
-    import graft.Json.{arr => jArr, obj => jObj, str => jStr}
-    // only types whose toString IS valid JSON pass through raw; any
-    // future column type (timestamp, date, array, struct) gets quoted
-    // and escaped instead of corrupting the document
-    def cell(v: Any): String = v match {
-      case null => "null"
-      case s: String => jStr(s)
-      case v: java.math.BigDecimal => v.toPlainString
-      case d: java.lang.Double => if (d.isInfinite || d.isNaN) jStr(d.toString) else d.toString
-      case f: java.lang.Float => if (f.isInfinite || f.isNaN) jStr(f.toString) else f.toString
-      case n: java.lang.Number => n.toString
-      case b: java.lang.Boolean => b.toString
-      case other => jStr(other.toString)
-    }
+    import graft.Json.{arr => jArr, cell, obj => jObj, str => jStr}
     def rowObj(df: DataFrame, r: org.apache.spark.sql.Row): String =
       jObj(df.columns.zipWithIndex.map { case (c, i) => c -> cell(r.get(i)) }.toSeq)
     def dfRows(dfOpt: Option[DataFrame]): String = jArr(

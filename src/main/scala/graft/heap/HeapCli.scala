@@ -1,6 +1,6 @@
 package graft.heap
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Command-line surface mirroring the reference binary + analysis
   * script (`dump-objects-to-parquet`, `count-records`, `dump-objects`,
@@ -17,36 +17,24 @@ import org.apache.spark.sql.SparkSession
   */
 object HeapCli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "convert" :: hprof :: out :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       new HeapDump(spark, hprof).writeParquet(out, resolveRefs = rest.contains("--resolve-refs"))
       println(s"wrote heap tables to $out")
       spark.stop()
     case "count-records" :: hprof :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       new HeapDump(spark, hprof).countRecords.collect()
         .foreach(r => println(f"${r.getLong(1)}%10d  ${r.getString(0)}"))
       spark.stop()
     case "dump-objects" :: hprof :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val limit = rest.headOption.map(_.toInt).getOrElse(100)
       new HeapDump(spark, hprof).renderObjects(limit).foreach(println)
       spark.stop()
     case "analyze" :: dir :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val maxTier = rest.headOption.map(_.toInt).getOrElse(2)
       val an = new HeapAnalysis(new HeapTables(spark, dir))
       an.summary.foreach(df => { println("== summary =="); df.show(false) })
@@ -54,23 +42,23 @@ object HeapCli {
       println(an.renderReport(an.runWasteAnalysis(maxTier)))
       spark.stop()
     case "analyze-json" :: dir :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val maxTier = rest.headOption.map(_.toInt).getOrElse(2)
       println(new HeapAnalysis(new HeapTables(spark, dir)).analyzeJson(maxTier = maxTier))
       spark.stop()
     case "query" :: dir :: sql :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       HeapSql.query(spark, dir, sql).show(100, truncate = false)
       spark.stop()
     case "diff" :: dirBefore :: dirAfter :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       import org.apache.spark.sql.functions.col
       HeapDiff.typeDelta(new HeapTables(spark, dirBefore), new HeapTables(spark, dirAfter))
         .map(_.orderBy(col("delta_bytes").desc, col("type_name")))
         .foreach(_.show(50, truncate = false))
       spark.stop()
     case "diff-retained" :: dirBefore :: dirAfter :: Nil =>
-      val spark = session()
+      val spark = GraftSession()
       import org.apache.spark.sql.functions.col
       HeapDiff.retainedDelta(new HeapTables(spark, dirBefore), new HeapTables(spark, dirAfter))
         .map(_.orderBy(col("delta_retained").desc, col("type_name")))

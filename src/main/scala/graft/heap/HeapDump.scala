@@ -581,36 +581,31 @@ final class HeapDump(spark: SparkSession, path: String) {
     *
     * The salt is SIZE-ADAPTIVE, assigned map-side from a per-task
     * running count: a class contributes one salt bucket per
-    * `rowsPerBucket` rows it has IN THAT TASK (capped at
-    * `saltBuckets`). Small classes — the overwhelming majority of a
+    * `RowsPerBucket` rows it has IN THAT TASK (capped at
+    * `SaltBuckets`). Small classes — the overwhelming majority of a
     * real dump's ~10k classes — land in a single bucket and produce
     * one file; only classes that are actually big (java.lang.String)
-    * spread across up to `saltBuckets` writer tasks. A uniform salt
+    * spread across up to `SaltBuckets` writer tasks. A uniform salt
     * costs classes × salt parquet footers (measured 6× slower on the
     * 200-class bench dump); per-class pre-counts would cost an extra
     * full parse. Zero extra passes, adaptive, deterministic table
     * CONTENT (file boundaries vary with partitioning, row data does
     * not).
     */
-  private[heap] def writeClassTablesSinglePass(outDir: String,
-      src: RDD[InstanceEv] = null): Unit = {
+  private def writeClassTablesSinglePass(outDir: String, src: RDD[InstanceEv]): Unit = {
     dropExistingClassTables(outDir)
     val tables: Map[Long, (String, Seq[LayoutField])] =
       index.classes.map { case (cid, ci) => cid -> (s"${ci.name}_$cid", ci.layout) }
     val bcTables = spark.sparkContext.broadcast(tables)
     val idSz = idSize
-    val saltBuckets = spark.conf.getOption("spark.graft.heap.saltBuckets")
-      .map(_.toInt).getOrElse(16)
-    val rowsPerBucket = spark.conf.getOption("spark.graft.heap.rowsPerBucket")
-      .map(_.toInt).getOrElse(1 << 16)
     val numParts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32))
-    val salted = (if (src == null) instancesEvents else src).mapPartitions { it =>
+    val salted = src.mapPartitions { it =>
       val seen = mutable.HashMap.empty[Long, Long]
       it.map { ev =>
         val c = seen.getOrElse(ev.classObjId, 0L)
         seen(ev.classObjId) = c + 1
-        (ev.classObjId, ((c / rowsPerBucket) % saltBuckets).toInt, ev.objId, ev.fields)
+        (ev.classObjId, ((c / HeapDump.RowsPerBucket) % HeapDump.SaltBuckets).toInt, ev.objId, ev.fields)
       }
     }
     spark.createDataFrame(salted)
@@ -679,6 +674,11 @@ final class HeapDump(spark: SparkSession, path: String) {
 }
 
 object HeapDump {
+  // size-adaptive salt of the robo-mode class-table write (see
+  // writeClassTablesSinglePass)
+  private final val RowsPerBucket = 1 << 16
+  private final val SaltBuckets = 16
+
   /** Re-lay an export as FLAT chunked files — the reference robo-mode
     * naming convention (`<table>_chunk<N>.parquet`,
     * dump_to_parquet.rs chunked per-class files) — so glob-based

@@ -388,14 +388,7 @@ object HeapMcp {
     * carries ONLY protocol frames (Spark logs go to stderr/log4j).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     serve(new HeapMcp(spark),
       new java.io.BufferedReader(new java.io.InputStreamReader(System.in)), System.out)
     spark.stop()

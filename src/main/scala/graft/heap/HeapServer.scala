@@ -1,11 +1,10 @@
 package graft.heap
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.Json
+import graft.{GraftSession, Json}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
-import scala.collection.mutable
 
 /** Long-running serving layer over the heap library — the transport
   * counterpart of the reference's MCP server (mcp_server/server.py):
@@ -131,7 +130,9 @@ final class HeapServer(spark: SparkSession, port: Int) {
         topN = p.get("top_n").fold(30)(_.toString.toInt),
         waste = p.get("waste").forall(_ == true),
         maxTier = p.get("max_tier").fold(2)(_.toString.toInt),
-        graph = p.get("graph").forall(_ == true)))
+        // graph sections are opt-in, as on the MCP twin: they are the
+        // expensive closure passes (minutes on a large dump)
+        graph = p.get("graph").exists(_ == true)))
 
     case ("POST", "/diff") =>
       val p = parseFlat(readBody(ex))
@@ -202,116 +203,30 @@ object HeapServer {
         java.net.URLDecoder.decode(kv.dropWhile(_ != '=').drop(1), UTF_8)
     })
 
-  /** One result cell as JSON — types whose toString IS valid JSON pass
-    * through raw, everything else is quoted and escaped (same rule as
-    * HeapAnalysis.analyzeJson).
-    */
-  private[heap] def cell(v: Any): String = v match {
-    case null => "null"
-    case s: String => Json.str(s)
-    case d: java.math.BigDecimal => d.toPlainString
-    case d: java.lang.Double => if (d.isInfinite || d.isNaN) Json.str(d.toString) else d.toString
-    case f: java.lang.Float => if (f.isInfinite || f.isNaN) Json.str(f.toString) else f.toString
-    case n: java.lang.Number => n.toString
-    case b: java.lang.Boolean => b.toString
-    case other => Json.str(other.toString)
-  }
-
   private[heap] def rowsJson(columns: Seq[String], rows: Seq[org.apache.spark.sql.Row]): String =
     Json.arr(rows.map(r =>
-      Json.obj(columns.zipWithIndex.map { case (c, i) => c -> cell(r.get(i)) })))
+      Json.obj(columns.zipWithIndex.map { case (c, i) => c -> Json.cell(r.get(i)) })))
 
-  /** Minimal FLAT JSON object parser (strings, integers, doubles,
-    * booleans, null) — exactly the payload shapes the tool routes
-    * take; nested objects/arrays are rejected loudly. Zero-dependency
-    * by design: the build allows nothing beyond Spark + scalatest.
+  /** A request body: one flat JSON object (strings, numbers, booleans,
+    * null) parsed by [[Json.parse]] — exactly the payload shapes the
+    * tool routes take. A blank body is an empty map; a non-object or a
+    * nested object/array value is rejected loudly.
     */
-  def parseFlat(s: String): Map[String, Any] = {
-    var i = 0
-    def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws()
-      if (i >= s.length || s(i) != c)
-        throw new IllegalArgumentException(s"malformed JSON: expected '$c' at offset $i")
-      i += 1
+  def parseFlat(s: String): Map[String, Any] =
+    if (s.trim.isEmpty) Map.empty
+    else Json.parse(s) match {
+      case m: Map[String, Any] @unchecked
+          if !m.values.exists(v => v.isInstanceOf[Map[_, _]] || v.isInstanceOf[Vector[_]]) => m
+      case _ =>
+        throw new IllegalArgumentException("nested JSON values are not supported by this API")
     }
-    def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (i < s.length && s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          if (i >= s.length) throw new IllegalArgumentException("malformed JSON: dangling escape")
-          s(i) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'u' =>
-              if (i + 4 >= s.length) throw new IllegalArgumentException("malformed \\u escape")
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => throw new IllegalArgumentException(s"bad escape \\$c")
-          }
-          i += 1
-        } else { sb += s(i); i += 1 }
-      }
-      expect('"')
-      sb.toString
-    }
-    def parseValue(): Any = {
-      ws()
-      if (i >= s.length) throw new IllegalArgumentException("malformed JSON: missing value")
-      s(i) match {
-        case '"' => parseString()
-        case '{' | '[' =>
-          throw new IllegalArgumentException("nested JSON values are not supported by this API")
-        case 't' if s.startsWith("true", i) => i += 4; true
-        case 'f' if s.startsWith("false", i) => i += 5; false
-        case 'n' if s.startsWith("null", i) => i += 4; null
-        case _ =>
-          val st = i
-          while (i < s.length && "+-.eE0123456789".indexOf(s(i).toInt) >= 0) i += 1
-          val tok = s.substring(st, i)
-          if (tok.isEmpty) throw new IllegalArgumentException(s"malformed JSON at offset $i")
-          if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble else tok.toLong
-      }
-    }
-    val out = mutable.LinkedHashMap.empty[String, Any]
-    ws()
-    if (i >= s.length) return out.toMap // empty body == empty params
-    expect('{')
-    ws()
-    if (i < s.length && s(i) == '}') return out.toMap
-    var done = false
-    while (!done) {
-      val k = parseString()
-      expect(':')
-      out(k) = parseValue()
-      ws()
-      if (i < s.length && s(i) == ',') { i += 1; ws() }
-      else { expect('}'); done = true }
-    }
-    out.toMap
-  }
 
   /** Standalone entry point: `runMain graft.heap.HeapServer [port]`
     * (or spark-submit on a cluster with SPARK_MASTER set).
     */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8765)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val srv = new HeapServer(spark, port).start()
     println(s"""{"serving":true,"port":${srv.boundPort}}""")
     // block: the HTTP executor threads are non-daemon, but keep the

@@ -74,6 +74,7 @@ object Graph {
     var r = nodes.select(col("v"), lit(init).as("r"))
     for (i <- 1 to iters) {
       r = iterate(nodes, withDeg, r, base, d100)
+      // localCheckpoint data is lost with its executor (no lineage to recompute)
       if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint()
     }
     r.select(col("v").as("node"), col("r").as("rank_ppt"))
@@ -644,7 +645,8 @@ object Graph {
         .select(col("v"),
           (when(isSeed, seedBase).otherwise(0L).cast("long") +
             expr(s"($d100 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
-      // lineage-depth guard, same as pageRank (no-op at the gates' iters)
+      // lineage-depth guard, same as pageRank (no-op at the gates' iters);
+      // localCheckpoint data is lost with its executor
       if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint()
     }
     r.select(col("v").as("node"), col("r").as("rank_ppt"))

@@ -390,6 +390,34 @@ class GraphSpec extends AnyFunSuite {
     assert(Graph.profile(messy).collect().head.toSeq === p.toSeq)
   }
 
+  test("pageRank and personalizedPageRank cross the lineage cut unchanged") {
+    // 10 rounds pass the localCheckpoint at round 8; the result must
+    // equal the same integer recurrence iterated in plain Scala
+    val iters = 10
+    assert(iters > Graph.checkpointEvery)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L), (5L, 3L))
+    val nodes = pairs.flatMap { case (s, d) => Seq(s, d) }.distinct
+    val outdeg = pairs.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    def reference(init: Map[Long, Long], restart: Long => Long): Map[Long, Long] =
+      (1 to iters).foldLeft(init) { (r, _) =>
+        val s = pairs.groupBy(_._2).map { case (d, es) =>
+          d -> es.map { case (src, _) => r(src) / outdeg(src) }.sum }
+        nodes.map(v => v -> (restart(v) + 85L * s.getOrElse(v, 0L) / 100)).toMap
+      }
+    val edges = pairs.toDF("src", "dst")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+    val init = S / nodes.size
+    val pr = reference(nodes.map(_ -> init).toMap, _ => init * 15 / 100)
+    assert(ranks(Graph.pageRank(edges, iters)) === pr)
+
+    val seedBase = S * 15 / 100
+    val ppr = reference(nodes.map(v => v -> (if (v == 1L) S else 0L)).toMap,
+      v => if (v == 1L) seedBase else 0L)
+    assert(ranks(Graph.personalizedPageRank(edges, Seq(1L), iters)) === ppr)
+  }
+
   test("duplicate input edges do not change the result") {
     val once = Graph.pageRank(pathEdges(1), iters = 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

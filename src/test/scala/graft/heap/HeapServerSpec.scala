@@ -122,6 +122,20 @@ class HeapServerSpec extends AnyFunSuite {
     post("/sessions/close", """{"session_id":"srv_an"}""")
   }
 
+  test("analyze graph sections are opt-in, as on the MCP twin") {
+    post("/convert",
+      s"""{"hprof_path":${graft.Json.str(hprofPath)},"output_dir":${graft.Json.str(exportDir)}}""")
+    post("/sessions/open", s"""{"parquet_dir":${graft.Json.str(exportDir)},"session_id":"srv_graph"}""")
+    val plain = post("/analyze", """{"session_id":"srv_graph","max_tier":1}""")
+    assert(plain.statusCode() === 200, plain.body())
+    assert(plain.body().contains("\"waste_findings\""))
+    assert(!plain.body().contains("\"retained\""), "graph sections without graph=true")
+    val withGraph = post("/analyze", """{"session_id":"srv_graph","max_tier":1,"graph":true}""")
+    assert(withGraph.statusCode() === 200, withGraph.body())
+    assert(withGraph.body().contains("\"retained\""))
+    post("/sessions/close", """{"session_id":"srv_graph"}""")
+  }
+
   test("diff route: growth census between two session dumps") {
     post("/convert",
       s"""{"hprof_path":${graft.Json.str(hprofPath)},"output_dir":${graft.Json.str(exportDir)}}""")
